@@ -3,7 +3,7 @@
 
 Both are the canonical "beyond one SQL query" shapes: connected components
 is an iterative fixpoint (non-SQL-expressible — rows-only checked), IVF
-uses a trained coarse quantizer (KMeans) as its bucketer.
+uses a trained coarse quantizer (the portable k-means) as its bucketer.
 """
 
 from __future__ import annotations
@@ -13,8 +13,6 @@ import pandas as pd  # module-level: pandas_udf type hints resolve from here
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from ecommerce_etl_pipeline_spark.operators.parallelism import ensure_parallelism
 
 
 #: Below this many (undirected) candidate edges the component resolution
@@ -360,9 +358,8 @@ def kmeans_step(
     BROADCAST (bounded by construction — k is a hyperparameter, not a data
     size), the corpus is scanned once, the per-dimension aggregation is
     one map-side-combined shuffle of k*dim cells, and the driver never
-    sees a vector. Iterating = feeding the recomputed centroids back in;
-    pyspark.ml's KMeans (used by :func:`ivf_topk`) is the library form of
-    the same loop.
+    sees a vector. Iterating = feeding the recomputed centroids back in
+    (:func:`kmeans_train_portable`).
 
     Returns (cluster, n_members, avg_dist, centroid_norm) — avg_dist /
     centroid_norm unrounded; oracle queries round both sides.
@@ -407,9 +404,12 @@ def _assign_literal_centroids(
     hundreds) it removes k-1 array re-traversals per row. Argmin =
     array_min over (dist, index) structs = lexicographic min — same
     tie-to-lowest-index as assign_to_seeds. ``pts`` must carry ``_pid`` /
-    ``_pv``; returns it with ``_cluster`` added. Shared by the FP and
-    portable trainers (centroid literals are reprs of Python floats, which
-    round-trip exactly, so the fold sees the same doubles DuckDB derives).
+    ``_pv``; returns it with ``_cluster`` added. The distributed venue of
+    :func:`kmeans_train_portable` (centroid literals are reprs of Python
+    floats, which round-trip exactly, so the fold sees the same doubles
+    DuckDB derives). Elements past the centroid width read as NULL
+    (``try_element_at``) under any ANSI setting, so a too-wide row reaches
+    the trainer's width check instead of failing inside the fold.
     """
     if kernel == "arrow":
         # r14: the numpy batch kernel (see _assign_arrow_udf) replaces the
@@ -444,7 +444,7 @@ def _assign_literal_centroids(
         F.expr(f"array_repeat(0.0D, {k})"),
         lambda acc, e: F.zip_with(
             acc,
-            F.element_at(F.expr(cols), e["i"]),
+            F.try_element_at(F.expr(cols), e["i"]),
             # ** 2 (POWER), not x*x: keeps each term bit-identical to
             # assign_to_seeds' fold, which the step-parity test compares
             lambda a, c: a + (e["x"] - c) ** 2,
@@ -458,67 +458,6 @@ def _assign_literal_centroids(
         )
     )["_c"]
     return pts.withColumn("_d", dists).withColumn("_cluster", best).drop("_d")
-
-
-def kmeans_train(
-    points: DataFrame,
-    *,
-    k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iterations: int = 10,
-    tol: float = 1e-6,
-    kernel: str = "arrow",
-) -> tuple[list[list[float]], int]:
-    """DataFrame-native Lloyd's algorithm: iterate nearest-centroid
-    assignment + centroid recomputation until the max centroid shift falls
-    under ``tol``. Deterministic: seeds are the k lowest-``id_col`` rows
-    (no RNG), ties go to the lowest centroid id, so results are identical
-    across runs and partitionings.
-
-    The driver holds ONLY k*dim floats per round (the centroid matrix —
-    a hyperparameter-sized collect, same bounded class as a join-strategy
-    statistic); each round is one corpus scan + one map-side-combined
-    shuffle of k*dim cells. This is the hand-rolled form of what
-    pyspark.ml's KMeans does with treeAggregate; use that at scale for
-    kmeans|| init and DenseVector kernels — this exists to show the
-    iterative-trainer shape as a plain DataFrame loop (compare
-    connected_components' label-propagation loop).
-
-    Returns (centroids, iterations_run).
-    """
-    pts = points.select(F.col(id_col).alias("_pid"), F.col(vec_col).alias("_pv"))
-    first = pts.orderBy("_pid").limit(k).collect()
-    centroids = [[float(x) for x in r["_pv"]] for r in first]
-    dim = len(centroids[0])
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
-        assigned = _assign_literal_centroids(pts, centroids, kernel=kernel).select(
-            F.col("_pv"), F.col("_cluster")
-        )
-        sums = (
-            assigned.select("_cluster", F.posexplode("_pv").alias("_d", "_v"))
-            .groupBy("_cluster", "_d")
-            .agg(F.sum(F.col("_v").cast("double")).alias("_sv"), F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        new_centroids = [list(c) for c in centroids]  # empty clusters keep position
-        counts = [0] * k
-        per_dim: dict[int, list[float]] = {}
-        for r in sums:
-            per_dim.setdefault(r["_cluster"], [0.0] * dim)[r["_d"]] = r["_sv"]
-            counts[r["_cluster"]] = r["_n"]
-        for ci, sv in per_dim.items():
-            new_centroids[ci] = [x / counts[ci] for x in sv]
-        shift = max(
-            sum((a - b) ** 2 for a, b in zip(c0, c1)) ** 0.5
-            for c0, c1 in zip(centroids, new_centroids)
-        )
-        centroids = new_centroids
-        if shift < tol:
-            break
-    return centroids, iterations
 
 
 def _driver_kmeans_loop_portable(
@@ -569,9 +508,10 @@ def kmeans_train_portable(
     driver_cells: int = KMEANS_DRIVER_CELLS,
 ) -> list[list[float]]:
     """Lloyd's k-means whose every cross-engine-sensitive step is made
-    engine-portable — the oracle-checkable twin of :func:`kmeans_train`
-    (same loop and scale shape; the pagerank_portable doctrine applied to
-    a centroid trainer):
+    engine-portable (the pagerank_portable doctrine applied to a centroid
+    trainer). Seeds are the k lowest-``id_col`` rows (no RNG), ties go to
+    the lowest centroid id, and the driver holds only the k x dim centroid
+    matrix per round:
 
     - per-dimension member sums run over NANO-QUANTIZED values
       (``floor(x*1e9 + 0.5)`` as bigint — txt_unigram_logprob's trick),
@@ -581,7 +521,7 @@ def kmeans_train_portable(
       ``CAST(SUM(..) AS DOUBLE) / COUNT``); int->double conversion and
       division are both IEEE-defined, so the replay is bit-identical in
       Python, Spark and DuckDB at any sum magnitude (not just < 2^53);
-    - a FIXED iteration count replaces the tol early-stop (a data-driven
+    - a FIXED iteration count replaces a tol early-stop (a data-driven
       break cannot unroll into SQL);
     - assignment distances reuse the literal-matrix single fold, whose
       left-to-right semantics DuckDB's list_sum replays exactly
@@ -608,11 +548,22 @@ def kmeans_train_portable(
     regime — the distributed loop runs with the ``kernel`` of choice
     (default: the vectorized arrow assignment); that is a venue pick,
     never a semantics change.
+
+    WIDTH contract: every non-empty vector has the seed width. A ragged
+    row raises ``ValueError`` in every venue and kernel (the driver venue
+    hands malformed rows to the distributed loop, which detects them in
+    the per-(cluster, dim) sums it already collects). NULL and empty
+    vectors contribute nothing to any centroid.
     """
     pts = points.select(F.col(id_col).alias("_pid"), F.col(vec_col).alias("_pv"))
     first = pts.orderBy("_pid").limit(k).collect()
     centroids = [[float(x) for x in r["_pv"]] for r in first]
     dim = len(centroids[0])
+    ragged = ValueError(
+        f"kmeans_train_portable: every vector must have the seed width {dim}"
+    )
+    if any(len(c) != dim for c in centroids):
+        raise ragged
     # no k floor (r15, ADVICE r14): driver_cells <= 0 must disable the
     # driver venue for ANY corpus (the escape hatch the venue-parity tests
     # use), so the probe is skipped outright rather than floored at k rows
@@ -656,10 +607,17 @@ def kmeans_train_portable(
         )
         new_centroids = [list(c) for c in centroids]  # empty clusters keep position
         counts: dict[int, int] = {}
-        per_dim: dict[int, list[int]] = {}
+        per_dim: dict[int, list[int | None]] = {}
         for r in sums:
-            per_dim.setdefault(r["_cluster"], [0] * dim)[r["_d"]] = r["_sv"]
-            counts[r["_cluster"]] = r["_n"]
+            ci, d = r["_cluster"], r["_d"]
+            # ragged rows show in the sums: a dim past the seed width, a
+            # member count that differs across one cluster's dims, or a
+            # dim no member reaches (checked below)
+            if d >= dim or counts.setdefault(ci, r["_n"]) != r["_n"]:
+                raise ragged
+            per_dim.setdefault(ci, [None] * dim)[d] = r["_sv"]
+        if any(None in sv for sv in per_dim.values()):
+            raise ragged
         for ci, sv in per_dim.items():
             # float(x) FIRST: the oracle divides CAST(sum AS DOUBLE)/count,
             # i.e. it rounds the integer sum to a double before dividing.
@@ -671,80 +629,6 @@ def kmeans_train_portable(
             new_centroids[ci] = [(float(x) / counts[ci]) / nano for x in sv]
         centroids = new_centroids
     return centroids
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    n_probe: int = 2,
-    k: int = 10,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: a KMeans coarse quantizer
-    assigns every vector to its nearest centroid cell; each query probes its
-    ``n_probe`` closest cells and ranks only those members.
-
-    The scale shape: candidate set ≈ corpus × n_probe / n_cells per query;
-    recall rises with n_probe at linear candidate cost. Training samples the
-    corpus (quantizer quality needs thousands of vectors, not all of them).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from ecommerce_etl_pipeline_spark.llmops.similarity import cosine, dot
-
-    corpus = ensure_parallelism(corpus)
-    with_vec = corpus.withColumn("_v", array_to_vector(F.col(vec_col)))
-    km = KMeans(k=n_cells, seed=seed, featuresCol="_v", predictionCol="_cell")
-    model = km.fit(with_vec.select("_v"))
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-
-    def cell_dists(vec):
-        # Euclidean-equivalent score: argmin ||x-c||^2 = argmax (x.c - ||c||^2/2)
-        # (the ||x||^2 term is constant per query) — MUST match the KMeans
-        # assignment metric or probes visit the wrong cells.
-        return F.array(
-            *[
-                dot(vec, F.array(*[F.lit(x) for x in c]))
-                - F.lit(sum(x * x for x in c) / 2.0)
-                for c in centroids
-            ]
-        )
-
-    def probe_cells(vec):
-        dists = cell_dists(vec)
-        idx = F.sequence(F.lit(0), F.lit(n_cells - 1))
-        pairs = F.zip_with(dists, idx, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
-        return F.slice(F.reverse(F.array_sort(pairs)), 1, n_probe)
-
-    assigned = model.transform(with_vec).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        F.col("_cell").cast("int").alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        F.explode(probe_cells(F.col(vec_col))).alias("probe"),
-    ).select("query_id", "query_vec", F.col("probe.i").alias("cell"))
-
-    scored = (
-        assigned.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("query_vec"), F.col("vec")))
-        .select("query_id", "neighbor_id", "cosine")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
 
 
 def ivf_topk_portable(
@@ -759,18 +643,17 @@ def ivf_topk_portable(
     iterations: int = 5,
     kernel: str = "arrow",
 ) -> DataFrame:
-    """IVF approximate top-k on the PORTABLE quantizer — the oracle-
-    checkable twin of :func:`ivf_topk` (VERDICT r7 #7): the coarse
-    quantizer is :func:`kmeans_train_portable` (deterministic lowest-id
-    seeds, integer-nano centroid updates, fixed iteration count), so the
-    trained centroids, every cell assignment, every probe choice and the
-    final cosine ranking all replay bit-for-bit in DuckDB as unrolled
-    CTEs — the whole ANN index build becomes a checkable quantity, not
-    just its recall.
+    """IVF approximate top-k on the PORTABLE quantizer (VERDICT r7 #7):
+    the coarse quantizer is :func:`kmeans_train_portable` (deterministic
+    lowest-id seeds, integer-nano centroid updates, fixed iteration
+    count), so the trained centroids, every cell assignment, every probe
+    choice and the final cosine ranking all replay bit-for-bit in DuckDB
+    as unrolled CTEs — the whole ANN index build becomes a checkable
+    quantity, not just its recall.
 
-    Scale shape (identical to ivf_topk): centroids are hyperparameter-
-    sized and broadcast; corpus assignment is one narrow scan (per-row
-    fold against the broadcast seed array, zero shuffles); probes are
+    Scale shape: centroids are hyperparameter-sized and broadcast; corpus
+    assignment is one narrow scan (per-row fold against the broadcast
+    seed array, zero shuffles); probes are
     |queries| x n_probe rows and broadcast into the candidate join, so
     each query ranks ~corpus * n_probe / n_cells members instead of the
     full corpus. Ties everywhere go to the lowest cid / neighbor_id, the

@@ -1209,7 +1209,7 @@ def semantic_dedup(
 
     Deterministic oracle-able form: one assignment pass against the
     ``n_seeds`` lowest-id vectors as centroids (the same rule
-    ml_kmeans_step checks); production swaps in kmeans_train's converged
+    ml_kmeans_step checks); production swaps in kmeans_train_portable's converged
     centroids — identical plan, different literals. Near-duplicate pairs
     (cosine >= threshold) resolve to clusters via connected components;
     the min-id member of each component is canonical.

@@ -15,8 +15,7 @@ payload bytes, and ``decode_features`` sniffs the container from magic
 bytes and emits exact integer pixel/sample statistics (byte-checkable
 against an oracle).
 Codec-library formats (JPEG/MP4/...) remain gated behind
-``require_codecs()``; the deterministic fake extractor is kept for
-plumbing-only tests.
+``require_codecs()``.
 """
 
 from __future__ import annotations
@@ -50,16 +49,6 @@ ASSET_SCHEMA = StructType(
         StructField("source", StringType()),
     ]
 )
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("head_byte", IntegerType()),
-        StructField("byte_checksum", LongType()),
-    ]
-)
-
 
 def require_codecs() -> None:
     """Gate for codec-library formats (JPEG/MP4/...) — those libraries are
@@ -478,34 +467,6 @@ def assets_from_documents(docs: DataFrame) -> DataFrame:
         F.octet_length("text").cast("bigint").alias("n_bytes"),
         "source",
     )
-
-
-def extract_features(assets: DataFrame, *, fake: bool = True) -> DataFrame:
-    """Per-asset feature extraction over mapInPandas (Arrow batches).
-
-    With ``fake=True`` computes deterministic byte-level features (length,
-    head byte, order-independent checksum); the real path would decode and
-    embed here, with identical plumbing: batch in, batch out, no driver
-    round-trip, parallelism = input partitions.
-    """
-    if not fake:
-        require_codecs()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "head_byte": payloads.map(
-                        lambda b: int(b[0]) if len(b) else -1
-                    ).astype("int32"),
-                    "byte_checksum": payloads.map(lambda b: int(sum(b))).astype("int64"),
-                }
-            )
-
-    return assets.mapInPandas(batches, FEATURE_SCHEMA)
 
 
 AUDIO_FRAME_SCHEMA = StructType(

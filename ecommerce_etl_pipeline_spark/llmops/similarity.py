@@ -840,7 +840,7 @@ def mmr_diversify_rows(
     pairwise sims, i.e. bounded DRIVER state by construction — so it
     collects ONCE (ids, relevances, embeddings in a single small job) and
     the K-step greedy argmax runs in pure Python via :func:`mmr_greedy`
-    (the kmeans_train/bpe_train bounded-state doctrine). This replaces the
+    (the kmeans_train_portable/bpe_train bounded-state doctrine). This replaces the
     r10 unrolled-lineage venue, which paid ~9s of Catalyst planning to
     re-rank 20 cached rows; output is pinned bit-equal to that venue in
     tests/test_llmops_algos.py."""
@@ -955,7 +955,7 @@ def mmr_diversify_unrolled(
 # reduction), and the query-time scan reads ONLY the code columns with
 # per-subspace lookup tables (ADC), never the vectors. Composes with IVF
 # (coarse cells, PQ within a cell) exactly like production FAISS indexes.
-# Everything is deterministic (kmeans_train's lowest-id seeding, struct
+# Everything is deterministic (kmeans_train_portable's lowest-id seeding, struct
 # argmin tie-break on the lower code), so recall is measurable in pytest
 # the same way the LSH/IVF paths are.
 # ---------------------------------------------------------------------------

@@ -266,16 +266,6 @@ def distinct_bigram_count(text: Column) -> Column:
     return F.size(F.array_distinct(bigram_pairs(text)))
 
 
-def bigram_repetition(text: Column) -> Column:
-    """Repeated-bigram fraction: 1 - distinct/total bigrams — the
-    Gopher/C4-style repetition quality signal. Entirely scan-side (one
-    narrow HOF pass, no shuffle): at 100 TB this is the cheapest class of
-    quality filter and should run before anything wide. Total bigrams is
-    n_tokens - 1 (arithmetic, no array build)."""
-    total = token_count(text) - 1
-    return F.lit(1.0) - distinct_bigram_count(text) / total
-
-
 def max_run_count(sorted_arr: Column) -> Column:
     """Largest multiplicity of any element in a SORTED array, via one fold
     — the zero-shuffle per-row form of ``MAX(count) GROUP BY value``.

@@ -527,9 +527,8 @@ def _pagerank_oracle_sql(iterations: int = 6, scale: int = 10**12) -> str:
     "round 4: ranks update in EXACT integer picorank arithmetic "
     "(operators/graph.py::pagerank_portable — damping as the ratio "
     "85/100, truncating division), so sums are order-independent and the "
-    "six iterations unroll into plain DuckDB CTEs; the FP variant "
-    "(::pagerank, 1e-9 pure-Python parity in tests/test_graph.py) "
-    "remains for callers preferring exact mass conservation.",
+    "six iterations unroll into plain DuckDB CTEs; tests/test_graph.py "
+    "pins both venues to a pure-Python integer replay.",
 )
 def g1_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_etl_pipeline_spark.operators.graph import pagerank_portable

@@ -600,7 +600,7 @@ def _mmr_sel_ctes() -> str:
     "100 TB the IVF/LSH index swaps in for the same bounded pool); the "
     "pool and its pairwise sims are BOUNDED state by construction (<= N + "
     "N^2 rows), so the K-step greedy argmax runs driver-side over one "
-    "small collect (the kmeans_train/bpe_train bounded-state doctrine — "
+    "small collect (the kmeans_train_portable/bpe_train bounded-state doctrine — "
     "r10's unrolled-lineage venue paid ~9s of Catalyst planning to re-rank "
     "20 cached rows and is kept only as the pinned parity twin, "
     "similarity.mmr_diversify_unrolled). Scores stay raw doubles through "
@@ -1947,8 +1947,8 @@ def txt_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distance, recomputed-centroid L2 norm derived from per-dimension "
     "sums. Scale shape: k seed rows broadcast, one corpus scan, one "
     "map-side-combined k*dim-cell shuffle; the driver never holds a "
-    "vector. pyspark.ml's KMeans (ivf_topk's quantizer) is the library "
-    "form of this loop iterated.",
+    "vector. ml_kmeans_train iterates this loop "
+    "(clustering.kmeans_train_portable).",
 )
 def ml_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2046,10 +2046,9 @@ def _kmeans_train_oracle_sql(k: int = 4, iterations: int = 5, nano: int = 10**9)
     "round 4: member sums are nano-quantized INTEGERS (order-independent) "
     "and the iteration count is fixed, so five Lloyd rounds unroll into "
     "DuckDB CTEs and the whole training run replays bit-for-bit — the "
-    "pagerank_portable doctrine applied to a centroid trainer. The "
-    "tol-early-stop FP variant (::kmeans_train, monotone-inertia pytest "
-    "gates) remains; pyspark.ml KMeans is the production kernel for the "
-    "same shape.",
+    "pagerank_portable doctrine applied to a centroid trainer. The trainer's "
+    "inertia is pytest-gated within 10% of pyspark.ml KMeans, and all "
+    "venues and kernels are pinned bit-identical.",
 )
 def ml_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2472,8 +2471,7 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cell assignment, probe selection, candidate ranking — replays in DuckDB
 # on top of the shared _kmeans_ctes prefix. This upgraded sim_ivf_topk /
 # sim_ivf_recall from rows-only to oracle-backed (rows-only set 7 -> 5);
-# clustering.ivf_topk (pyspark.ml KMeans quantizer) remains the library
-# kernel, recall-gated in tests/test_similarity_recall.py.
+# the clustered-data recall gate is in tests/test_similarity_recall.py.
 # ---------------------------------------------------------------------------
 _IVF_CELLS, _IVF_PROBE, _IVF_ITER, _IVF_K = 16, 2, 5, 10
 _IVF_DISTQ = (
@@ -2531,9 +2529,8 @@ _IVF_WITH = _kmeans_ctes(_IVF_CELLS, _IVF_ITER) + f""",
     "members (~corpus/8 candidates per query). Upgraded from rows-only "
     "in round 8: the whole index build unrolls into DuckDB CTEs on the "
     "shared ml_kmeans_train prefix, so training, assignment, probing and "
-    "ranking are all hash-checked, not just recall-gated. The "
-    "pyspark.ml-KMeans variant (clustering.ivf_topk) stays as the "
-    "library kernel with its recall>=0.9 pytest gate.",
+    "ranking are all hash-checked, not just recall-gated; the same "
+    "index also carries a recall>=0.9 pytest gate on clustered data.",
 )
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_etl_pipeline_spark.llmops.clustering import ivf_topk_portable
@@ -3933,8 +3930,8 @@ def sim_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     "coarse-quantizer path. Upgraded from rows-only in round 8: the "
     "portable quantizer makes BOTH rankings and the recall arithmetic "
     "DuckDB-replayable (hits as integer counts, recall = hits/10.0). "
-    "The clustered-data recall>=0.9 gate on the pyspark.ml variant "
-    "lives in tests/test_similarity_recall.py.",
+    "The clustered-data recall>=0.9 gate on the same index lives in "
+    "tests/test_similarity_recall.py.",
 )
 def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_etl_pipeline_spark.llmops.clustering import ivf_topk_portable

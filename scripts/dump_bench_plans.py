@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Dump `.explain("formatted")` for bench queries into plans/r15/<q>_<tag>.txt.
+"""Dump `.explain("formatted")` for bench queries into <out_dir>/<q>_<tag>.txt.
 
-Optimization-round artifact (r15): the judge cannot run Spark and checks
-plan claims against these files. Usage:
+Optimization-round artifact: plan claims (Exchange counts, join
+strategies) are checked against these files without running Spark. Usage:
 
-    python scripts/dump_r15_plans.py before [query ...]
-    python scripts/dump_r15_plans.py after  [query ...]
+    python scripts/dump_bench_plans.py plans/r15 before [query ...]
+    python scripts/dump_bench_plans.py plans/r15 after  [query ...]
 
 With no query list, dumps every HEADLINE + EXTENDED bench query. Plans are
 captured at sf0.1 (the bench scale) with a vanilla-default session from the
@@ -27,14 +27,17 @@ from ecommerce_etl_pipeline_spark.plans import all_queries  # noqa: E402
 from ecommerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15")
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or [*HEADLINE, *EXTENDED]
-    os.makedirs(OUT, exist_ok=True)
-    spark = get_spark(app_name=f"dump_r15_{tag}")
+    if len(sys.argv) < 2:
+        print(__doc__)
+        return 2
+    out = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or [*HEADLINE, *EXTENDED]
+    os.makedirs(out, exist_ok=True)
+    spark = get_spark(app_name=f"dump_plans_{tag}")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
     for name in names:
@@ -42,7 +45,7 @@ def main() -> int:
             print(f"skip {name} (not registered)")
             continue
         df = queries[name](spark, SF)
-        path = os.path.join(OUT, f"{name}_{tag}.txt")
+        path = os.path.join(out, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
                 df._jdf.queryExecution(), "formatted"))

@@ -1,11 +1,8 @@
-"""PageRank DataFrame loop vs a pure-Python reference replay, plus the
-structural invariants (mass conservation, symmetry, dangling handling)."""
+"""Integer PageRank (both venues) vs pure-Python reference replays, plus
+the structural invariants (symmetry, dangling handling, input contracts)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from ecommerce_etl_pipeline_spark.operators.graph import pagerank
 
 
 def _ref_pagerank(edges, damping=0.85, iterations=10):
@@ -25,33 +22,6 @@ def _ref_pagerank(edges, damping=0.85, iterations=10):
             v: (1 - damping) / n + damping * (recv[v] + dm / n) for v in nodes
         }
     return rank
-
-
-def test_pagerank_matches_reference_with_dangling(spark):
-    # 4 is a dangling sink; 1-2-3 form a cycle feeding it
-    edges = [(1, 2), (2, 3), (3, 1), (1, 4), (3, 4)]
-    df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    res = pagerank(df)
-    got = {r["node"]: r["rank"] for r in res.collect()}
-    for _c in res.retained_caches:  # honor the cache contract
-        _c.unpersist(blocking=True)
-    want = _ref_pagerank(edges)
-    assert set(got) == set(want)
-    for v in want:
-        assert abs(got[v] - want[v]) < 1e-9, (v, got[v], want[v])
-    assert abs(sum(got.values()) - 1.0) < 1e-9  # mass conserved
-
-
-def test_pagerank_uniform_on_symmetric_clique(spark):
-    edges = [(a, b) for a in range(1, 5) for b in range(1, 5) if a != b]
-    df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    res = pagerank(df, iterations=5)
-    got = [r["rank"] for r in res.collect()]
-    for _c in res.retained_caches:
-        _c.unpersist(blocking=True)
-    assert len(got) == 4
-    for r in got:
-        assert abs(r - 0.25) < 1e-12
 
 
 def _ref_pagerank_portable(edges, iterations=6, scale=10**12):
@@ -113,6 +83,19 @@ def test_pagerank_portable_tracks_fp_variant(spark):
         _c.unpersist(blocking=True)
     for v, r in got.items():
         assert abs(r - 0.25) < 1e-9, (v, r)
+
+    # with a dangling sink (4) the redistributed mass must track the FP
+    # reference too, in both venues
+    edges = [(1, 2), (2, 3), (3, 1), (1, 4), (3, 4)]
+    df = spark.createDataFrame(edges, "src LONG, dst LONG")
+    want = _ref_pagerank(edges, iterations=6)
+    for res in (pagerank_portable(df), pagerank_portable(df, driver_edge_rows=0)):
+        got = {r["node"]: r["rank"] / 1e12 for r in res.collect()}
+        for _c in res.retained_caches:
+            _c.unpersist(blocking=True)
+        assert set(got) == set(want)
+        for v in want:
+            assert abs(got[v] - want[v]) < 1e-9, (v, got[v], want[v])
 
 
 def test_pagerank_portable_symmetric_all_venues_identical(spark):
@@ -241,7 +224,6 @@ def test_pagerank_empty_and_single_node_graphs(spark):
 
     empty = spark.createDataFrame([], "src LONG, dst LONG")
     for out in (
-        pagerank(empty),
         pagerank_portable(empty),
         pagerank_portable(empty, driver_edge_rows=0),  # distributed venue
         pagerank_portable(
